@@ -125,7 +125,7 @@ class Catalog:
         CBO cardinalities.
         """
         for n in names:
-            spark.sql(f"DROP VIEW IF EXISTS {n}")
+            spark.catalog.dropTempView(n)
             spark.sql(f"DROP TABLE IF EXISTS {n}")
             spark.sql(f"CREATE TABLE {n} USING parquet LOCATION '{self.path(n)}'")
             spark.sql(f"ANALYZE TABLE {n} COMPUTE STATISTICS")

@@ -24,8 +24,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ascii_hydra_spark.catalog import TABLES, Catalog
+from ascii_hydra_spark.plans import write_counted
 from ascii_hydra_spark.session import ExecutionMode, SessionProfile, build_spark
-from ascii_hydra_spark.sources import write_parquet
+# materialize writes through plans.write_counted; this name stays importable
+# because perfbench/run.py wraps it to trace sink writes
+from ascii_hydra_spark.sources import write_parquet  # noqa: F401
 
 
 @dataclass
@@ -94,9 +97,9 @@ class HydraEngine:
         name: str,
         partition_by: tuple[str, ...] = (),
     ) -> dict:
-        """Write a result as a named parquet dataset + run report (A21)."""
+        """Write a result as a named parquet dataset + run report (A21);
+        `row_count` is the rows written, as in `Pipeline.run`."""
         path = f"{self.output_root}/{name}"
-        write_parquet(df, path, partition_by=partition_by)
-        back = self.spark.read.parquet(path)
+        _, row_count = write_counted(df, path, partition_by)
         self.catalog.overrides[name] = path
-        return {"asset": name, "path": path, "row_count": back.count()}
+        return {"asset": name, "path": path, "row_count": row_count}

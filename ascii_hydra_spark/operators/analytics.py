@@ -2525,8 +2525,7 @@ def theil_sen_trend(
     the exact interpolated percentile over the slope set.
 
     EAGER: constructing this DataFrame materializes the O(days^2) slope
-    lattice via `truncate_lineage` (localCheckpoint — executor-loss
-    rebuilds are NOT covered, the `reliable=False` tradeoff) because
+    lattice via `truncate_lineage` (lineage.py) because
     distrank's rank passes plus the count/median branches would each
     re-execute the quadratic join otherwise. Same contract as
     `remove_boilerplate`.

@@ -551,7 +551,6 @@ def connected_components(
     src_col: str = "src",
     dst_col: str = "dst",
     max_iter: int = 25,
-    reliable: bool = False,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
@@ -568,9 +567,9 @@ def connected_components(
     rounds, not O(diameter): a million-node chain converges in ~20 rounds
     where plain propagation needs a million. Convergence is checked with
     a bounded aggregate (count of changed labels — a scalar, not a
-    collect), and labels are localCheckpoint()ed every iteration to
-    truncate the lineage that iterative plans otherwise grow without
-    bound. Raises if max_iter rounds pass without convergence rather than
+    collect), and labels are checkpointed every iteration to truncate
+    the lineage that iterative plans otherwise grow without bound.
+    Raises if max_iter rounds pass without convergence rather than
     returning partial labels silently.
     """
     # materialize the edge list ONCE before symmetrizing: `edges` is
@@ -586,14 +585,13 @@ def connected_components(
     # two identical 276 MB pair-count exchanges); symmetrizing on top of
     # the checkpointed half-list reads materialized data instead.
     half = truncate_lineage(
-        edges.select(F.col(src_col).alias("__u"), F.col(dst_col).alias("__v")),
-        reliable=reliable,
+        edges.select(F.col(src_col).alias("__u"), F.col(dst_col).alias("__v"))
     )
     sym = half.union(
         half.select(F.col("__v").alias("__u"), F.col("__u").alias("__v"))
     )
     labels = nodes.select(F.col(id_col).alias("__id"), F.col(id_col).alias("__label"))
-    labels = truncate_lineage(labels, reliable=reliable)
+    labels = truncate_lineage(labels)
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels, sym["__v"] == labels["__id"])
@@ -623,7 +621,7 @@ def connected_components(
                 ).alias("__label"),
             )
         )
-        jumped = truncate_lineage(jumped, reliable=reliable)
+        jumped = truncate_lineage(jumped)
         changed = (
             jumped.join(
                 labels.select(F.col("__id").alias("__oid"), F.col("__label").alias("__old")),
@@ -648,17 +646,13 @@ def cluster_dedup(
     id_col: str,
     pair_a: str = "id_a",
     pair_b: str = "id_b",
-    reliable: bool = False,
 ) -> DataFrame:
     """Full near-dup dedup decision: duplicate PAIRS -> connected CLUSTERS
     -> keep the minimum-id row per cluster (deterministic canonical winner,
     transitively closed). Rows in no pair are their own cluster and always
-    survive. reliable=True checkpoints each propagation round through the
-    session checkpoint dir so executor loss doesn't kill an hours-long run
-    (operators/lineage.py)."""
+    survive."""
     comps = connected_components(
-        df.select(F.col(id_col)), pairs, id_col=id_col, src_col=pair_a,
-        dst_col=pair_b, reliable=reliable,
+        df.select(F.col(id_col)), pairs, id_col=id_col, src_col=pair_a, dst_col=pair_b
     )
     return df.join(
         comps.filter(F.col(id_col) == F.col("component")).select(id_col), id_col, "left_semi"

@@ -14,7 +14,7 @@ dedup.connected_components):
 - the edge list is computed ONCE, persisted, and reused every iteration —
   the shuffle that builds it is paid once, and each iteration's only
   shuffle is the rank aggregation on dst;
-- lineage is truncated with localCheckpoint every iteration, otherwise the
+- lineage is truncated (operators/lineage.py) every iteration, otherwise the
   plan doubles per round and the job dies on planning long before it dies
   on data;
 - iteration count is FIXED (not convergence-polled per row), so the run is
@@ -34,7 +34,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list.
 
@@ -48,9 +47,7 @@ def pagerank(
     persisted already hash-partitioned from the previous join, and the
     dangling-mass term is a 1-row aggregate DataFrame cross-broadcast into
     the rank update — no `.collect()` in the loop body; the only per-round
-    driver action is the lineage truncation (localCheckpoint by default;
-    `reliable=True` checkpoints through the session checkpoint dir so an
-    executor loss mid-run recomputes nothing fatal — see lineage.py).
+    driver action is the lineage truncation (see lineage.py).
     """
     # persist the deduped edge list FIRST: nodes, out_deg and ew all
     # derive from it, and unpersisted each would re-run the caller's
@@ -105,8 +102,7 @@ def pagerank(
                     + F.lit(damping) * F.col("__dangling") / F.lit(float(n))
                     + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
                 ).alias("rank"),
-            ),
-            reliable=reliable,
+            )
         )
     ew.unpersist()
     out_deg.unpersist()
@@ -114,9 +110,7 @@ def pagerank(
     return ranks
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", reliable: bool = False
-) -> DataFrame:
+def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Global triangle count over an undirected graph (1 row: n_triangles).
 
     Degree-oriented enumeration — the standard distributed formulation
@@ -158,8 +152,7 @@ def triangle_count(
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
             F.when(fwd, F.col("du")).otherwise(F.col("dv")).alias("da"),
             F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
-        ),
-        reliable=reliable,
+        )
     )
     o1 = oriented.select(
         F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx")
@@ -184,7 +177,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, the deterministic variant): every node starts labeled
@@ -245,7 +237,7 @@ def label_propagation(
             )
             .select("node", F.col("__b.l").alias("label"))
         )
-        labels = truncate_lineage(new, reliable=reliable)
+        labels = truncate_lineage(new)
     und.unpersist()
     return labels
 
@@ -293,7 +285,6 @@ def powerlaw_alpha(
 def kcore_peel(
     edges: DataFrame, k: int = 3, rounds: int = 3,
     src_col: str = "src", dst_col: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Per peel round (round, n_nodes, n_edges): iterative k-core
     peeling — drop every node with degree < k, drop incident edges,
@@ -335,7 +326,7 @@ def kcore_peel(
     # join+distinct chain (98 MB of parquet input) executed TWICE before
     # this barrier; rounds only shrink the set, so the cost is bounded
     # by the first survivor set (same discipline as the per-round cur)
-    cur = truncate_lineage(und, reliable=reliable)
+    cur = truncate_lineage(und)
     # The per-round stats row is derived from the NEXT degree table rather
     # than a separate full pass over cur (r10 optimization, guide §2.4):
     # deg(cur_r) has one row per distinct endpoint (n_nodes = COUNT(*)) and
@@ -357,8 +348,7 @@ def kcore_peel(
         cur = truncate_lineage(
             cur.join(keep, "a", "semi")
             .join(keep.select(F.col("a").alias("b")), "b", "semi")
-            .select("a", "b"),
-            reliable=reliable,
+            .select("a", "b")
         )
         # round r's cur is checkpointed (eager) above, so deg r-1 has no
         # remaining consumer once round r's deg exists — unpersist it
@@ -460,7 +450,6 @@ def clustering_coefficients(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """One-row clustering summary: (n_nodes_deg2, n_wedges,
     n_closed_wedges, transitivity, avg_local_cc).
@@ -515,8 +504,7 @@ def clustering_coefficients(
             F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
             F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
-        ),
-        reliable=reliable,
+        )
     )
     o1 = oriented.select(F.col("a"), F.col("b").alias("x"), F.col("db").alias("dx"))
     o2 = oriented.select(F.col("a"), F.col("b").alias("y"), F.col("db").alias("dy"))
@@ -641,7 +629,6 @@ def bfs_frontier_counts(
     hops: int = 3,
     src: str = "src",
     dst: str = "dst",
-    reliable: bool = False,
 ) -> DataFrame:
     """Per-hop row (hop, n_frontier, n_visited): breadth-first frontier
     expansion from a seed node set — the reachability probe behind
@@ -658,12 +645,10 @@ def bfs_frontier_counts(
     both = truncate_lineage(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        reliable=reliable,
+        .distinct()
     )
     frontier = truncate_lineage(
-        seeds.select(F.col(seeds.columns[0]).alias("n")).distinct(),
-        reliable=reliable,
+        seeds.select(F.col(seeds.columns[0]).alias("n")).distinct()
     )
     visited = frontier
     stats = []
@@ -672,10 +657,9 @@ def bfs_frontier_counts(
             both.join(frontier.withColumnRenamed("n", "a"), "a")
             .select(F.col("b").alias("n"))
             .distinct()
-            .join(visited, "n", "left_anti"),
-            reliable=reliable,
+            .join(visited, "n", "left_anti")
         )
-        visited = truncate_lineage(visited.union(nxt), reliable=reliable)
+        visited = truncate_lineage(visited.union(nxt))
         stats.append(
             nxt.agg(
                 F.lit(k).alias("hop"),
@@ -701,7 +685,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     k: int = 10,
-    reliable: bool = False,
 ) -> DataFrame:
     """Top-k nodes by HITS authority after a fixed number of
     hub/authority power iterations — the bipartite-flavored authority
@@ -721,12 +704,11 @@ def hits(
         .filter(F.col("s") != F.col("d"))
         .distinct()
     )
-    e = truncate_lineage(e, reliable=reliable)
+    e = truncate_lineage(e)
     nodes = truncate_lineage(
         e.select(F.col("s").alias("n"))
         .union(e.select(F.col("d").alias("n")))
-        .distinct(),
-        reliable=reliable,
+        .distinct()
     )
     auth = nodes.select("n", F.lit(1.0).alias("a"))
     for _ in range(iterations):
@@ -739,8 +721,7 @@ def hits(
         hub = truncate_lineage(
             e.join(auth.withColumnRenamed("n", "d"), "d")
             .groupBy(F.col("s").alias("n"))
-            .agg(F.sum("a").alias("h")),
-            reliable=reliable,
+            .agg(F.sum("a").alias("h"))
         )
         hub = hub.crossJoin(
             F.broadcast(hub.agg(F.max("h").alias("__mx")))
@@ -748,8 +729,7 @@ def hits(
         auth = truncate_lineage(
             e.join(hub.withColumnRenamed("n", "s"), "s")
             .groupBy(F.col("d").alias("n"))
-            .agg(F.sum("h").alias("a")),
-            reliable=reliable,
+            .agg(F.sum("h").alias("a"))
         )
         auth = auth.crossJoin(
             F.broadcast(auth.agg(F.max("a").alias("__mx")))

@@ -1,25 +1,29 @@
-"""Lineage truncation with an executor-loss-resilience knob.
+"""Lineage truncation whose durability follows the deployment.
 
 Iterative and reused-subtree operators (PageRank, connected components,
 boilerplate removal, snapshot drift) must materialize intermediate
 DataFrames: without truncation the lineage grows per iteration (planning
 blows up) or the same expensive subtree is recomputed per consumer.
 
-Two materialization strategies, chosen per call site via `reliable`:
+Every operator truncates through :func:`truncate_lineage`, and the
+session's checkpoint directory picks the strategy:
 
-- ``reliable=False`` (default): ``localCheckpoint`` — blocks are
-  executor-local disk/memory, written with no extra I/O beyond the
-  shuffle, and reclaimed by the ContextCleaner when the plan is dropped
-  (no session-lifetime cache leak). The cost at cluster scale: blocks are
-  NOT replicated, so losing one executor mid-query kills the query
-  instead of recomputing lineage (which was truncated). Right for
-  local-mode and short interactive queries.
-- ``reliable=True``: ``checkpoint`` against the session checkpoint
-  directory (``spark.sparkContext.setCheckpointDir`` — on a real cluster,
-  an HDFS/S3 path). Survives executor loss; costs a write+read of the
-  materialized data through the distributed FS. Right for 100 TB runs on
-  preemptible/spot executors where a lost node must not kill an
-  hours-long job. See SCALE.md "Lineage truncation" for the tradeoff.
+- no checkpoint directory (the default): ``localCheckpoint`` — blocks
+  are executor-local disk/memory, written with no extra I/O beyond the
+  shuffle, and reclaimed by the ContextCleaner when the plan is dropped.
+  Blocks are NOT replicated, so losing an executor mid-query kills the
+  query (its lineage was truncated, nothing can be recomputed). Right for
+  local mode and short jobs.
+- checkpoint directory set (``spark.checkpoint.dir`` in the platform's
+  Spark conf, or ``sparkContext.setCheckpointDir``; on a cluster an
+  HDFS/S3 path): reliable ``checkpoint`` through that directory. Survives
+  executor loss at the cost of a write+read through the distributed FS.
+  Right for long runs on preemptible/spot executors.
+
+Same rule as MLlib's ``checkpointInterval``, which only takes effect when
+the SparkContext has a checkpoint directory: resilience is a deployment
+setting, so one script runs unchanged on a laptop and on a spot cluster.
+See SCALE.md "Lineage truncation".
 """
 
 from __future__ import annotations
@@ -27,23 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def truncate_lineage(
-    df: DataFrame, reliable: bool = False, eager: bool = True
-) -> DataFrame:
-    """Materialize `df` and cut its lineage; see module docstring.
-
-    With ``reliable=True`` the session must have a checkpoint directory
-    set (``spark.sparkContext.setCheckpointDir``); a missing one is
-    raised eagerly with an actionable message instead of Spark's generic
-    failure at materialization time.
-    """
-    if reliable:
-        sc = df.sparkSession.sparkContext
-        if not sc.getCheckpointDir():
-            raise ValueError(
-                "reliable=True needs a checkpoint directory: call "
-                "spark.sparkContext.setCheckpointDir(<HDFS/S3/local path>) "
-                "before running this operator"
-            )
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """Eagerly materialize `df` and cut its lineage; see module docstring."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint()
+    return df.localCheckpoint()

@@ -47,6 +47,20 @@ def plan_report(df: DataFrame) -> dict:
     }
 
 
+def write_counted(
+    df: DataFrame, path: str, partition_by: tuple[str, ...] = ()
+) -> tuple[DataFrame, int]:
+    """Write `df` as parquet at `path`; returns (the re-read dataset, rows
+    written). The row count rides the WRITE job as an `Observation` —
+    counting a re-read of the sink costs a second full scan, which at
+    100 TB doubles the I/O for a metadata field."""
+    obs = Observation()
+    write_parquet(
+        df.observe(obs, F.count(F.lit(1)).alias("row_count")), path, partition_by=partition_by
+    )
+    return df.sparkSession.read.parquet(path), obs.get["row_count"]
+
+
 @dataclass
 class Asset:
     """One named node: fn(spark, {dep_name: DataFrame}) -> DataFrame."""
@@ -78,18 +92,9 @@ class Pipeline:
 
         return reg
 
-    def run(
-        self,
-        spark: SparkSession,
-        analyze: bool = False,
-        partition_key: str | None = None,
-    ) -> dict[str, dict]:
+    def run(self, spark: SparkSession, partition_key: str | None = None) -> dict[str, dict]:
         """Materialize all assets in dependency order; returns run reports
         (the Dagster-free equivalent of report_asset_materialization).
-
-        `analyze=True` runs ANALYZE TABLE after each materialization so
-        downstream CBO join reordering has real cardinalities — the
-        reference enables CBO but never feeds it stats (SURVEY §4).
 
         `partition_key` is handed to asset fns that declare a third
         parameter (reference: partition_key extras flow into
@@ -109,27 +114,12 @@ class Pipeline:
             else:
                 df = a.fn(spark, deps)
             path = f"{self.base_path}/{name}"
-            # row count via observe(): the metric rides the WRITE job.
-            # The previous shape (count() on a re-read of the sink) costs a
-            # second full scan per asset — at 100 TB that doubles pipeline
-            # I/O for a metadata field.
-            obs = Observation(f"asset_{name}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("row_count"))
-            write_parquet(df, path, partition_by=a.partition_by)
-            materialized = spark.read.parquet(path)
-            if analyze:
-                # ANALYZE needs a catalog table (not a temp view): register
-                # the materialized parquet as an external table, then stat it
-                spark.sql(f"DROP TABLE IF EXISTS __asset_{name}")
-                spark.sql(
-                    f"CREATE TABLE __asset_{name} USING parquet LOCATION '{path}'"
-                )
-                spark.sql(f"ANALYZE TABLE __asset_{name} COMPUTE STATISTICS")
+            materialized, row_count = write_counted(df, path, a.partition_by)
             outputs[name] = materialized
             reports[name] = {
                 "asset": name,
                 "path": path,
-                "row_count": obs.get["row_count"],
+                "row_count": row_count,
                 "n_columns": len(materialized.columns),
                 "duration_sec": round(time.monotonic() - t0, 3),
             }

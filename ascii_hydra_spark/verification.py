@@ -44,6 +44,7 @@ from ascii_hydra_spark.operators import (
     text,
     windows,
 )
+from ascii_hydra_spark.operators.lineage import truncate_lineage
 from ascii_hydra_spark import sources, streaming
 
 
@@ -4155,7 +4156,7 @@ def _wat_edges_multisuffix(spark):
     """Engine side of the eTLD+1 pipeline entries: multi-suffix linked
     WARC fixture -> 200/text-html gate -> anchor extraction. 240
     records = 2 full template x group x status cycles (lcm(8,3,5) =
-    120). The extracted edge list is localCheckpoint-ed: downstream the
+    120). The extracted edge list is lineage-truncated: downstream the
     registered-domain probe references each surt column ~10x, and an
     un-truncated lineage clones the whole surt_url extraction tree into
     every reference AND into the pushed-down null-domain filter — a
@@ -4182,7 +4183,7 @@ def _wat_edges_multisuffix(spark):
     live = recs.filter(
         (F.col("http_status") == 200) & (F.col("content_type") == "text/html")
     )
-    return wat_outlinks(live).localCheckpoint()
+    return truncate_lineage(wat_outlinks(live))
 
 
 @q(
@@ -5110,7 +5111,7 @@ def token_drift_snapshots(spark, sf_dir):
     "fixed-iteration PageRank over the customer->supplier purchase graph "
     "(paper-parity: the reference's graph assets are relational ops; this "
     "adds the canonical iterative one). Edge list persisted once, one "
-    "shuffle per iteration, localCheckpoint lineage truncation; "
+    "shuffle and one lineage truncation per iteration; "
     "conservation + hand-computed-value tests in tests/test_graph.py. "
     "Hash-matched against the UNROLLED 5-iteration SQL in DuckDB",
 )
@@ -20725,8 +20726,6 @@ def theil_sen_slope_ci(spark, sf_dir):
     # consumer re-executed the whole quadratic join before this (stage
     # capture: ~6 executions, 16.6 s total at sf0.1); pair-count-sized,
     # so the checkpoint is bounded
-    from ascii_hydra_spark.operators.lineage import truncate_lineage
-
     p = truncate_lineage(p)
     ranked = distrank.global_row_number(
         p, F.col("slope"), [F.col("i"), F.col("j")], out_col="rk"

@@ -105,8 +105,10 @@ def test_catalog_normalizes_event_timestamps(spark, sf_dir):
 
 def test_catalog_analyze_feeds_cbo_stats(spark, sf_dir):
     """B9/B4: ANALYZE must produce real table stats (the reference enables
-    CBO but never feeds it; and ANALYZE silently fails on temp views)."""
+    CBO but never feeds it; and ANALYZE silently fails on temp views).
+    A second call in the same session replaces the table it created."""
     cat = Catalog.for_dir(sf_dir)
+    cat.analyze(spark, ("nation",))
     cat.analyze(spark, ("nation",))
     stats = (
         spark.sql("DESCRIBE EXTENDED nation")
